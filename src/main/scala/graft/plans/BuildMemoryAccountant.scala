@@ -23,6 +23,16 @@ import org.apache.spark.memory.{MemoryConsumer, MemoryMode, TaskMemoryManager}
  *    (`spark.graft.intervalJoin.maxBuildBytes`, 0 = off) fails the build
  *    deterministically once exceeded.
  *
+ * What is charged: for the interval join, the bytes its build actually
+ * holds per row — the page record (8-byte header + the UnsafeRow's bytes,
+ * see [[RowPageWriter]]) plus the row's 8-byte address — and, per indexed
+ * interval, an estimate of the bound vectors and index arrays; for the
+ * count pushdown, the interval estimate alone (it stores no rows). While
+ * the join re-lays its rows in index order, the arrival-order pages sit
+ * beside the final ones: the final copy is charged before it is written,
+ * so the cap and the reservation cover that peak, and the arrival copy is
+ * [[release]]d once dropped, so the metric reports what the build keeps.
+ *
  * Instantiate once per `buildSide()` call; not thread-shared.
  */
 final class BuildMemoryAccountant(maxBuildBytes: Long) {
@@ -50,6 +60,16 @@ final class BuildMemoryAccountant(maxBuildBytes: Long) {
         "side (filter earlier), raise executor memory, or partition on a " +
         "higher-cardinality key.")
 
+  /** Return `bytes` charged by [[add]] for a copy the build has dropped,
+    * and the pool memory that no longer backs a charge. */
+  def release(bytes: Long): Unit = {
+    usedBytes -= bytes
+    if (consumer != null && reserved > usedBytes) {
+      consumer.freeMemory(reserved - usedBytes)
+      reserved = usedBytes
+    }
+  }
+
   /** Account `bytes` more build memory. */
   def add(bytes: Long): Unit = {
     usedBytes += bytes
@@ -76,11 +96,11 @@ object BuildMemoryAccountant {
     override def spill(size: Long, trigger: MemoryConsumer): Long = 0L
   }
 
-  /** Rough per-indexed-interval cost: 3 stored ints + equal-sized index
-    * arrays + growth slack. */
+  /** Rough per-indexed-interval cost: the start/end/address vectors the
+    * build accumulates + equal-sized index arrays + growth slack. */
   val IntervalOverhead: Int = 32
   /** Int64-coordinate variant: two Long bounds instead of Int. */
   val LongIntervalOverhead: Int = 48
-  /** Per stored row: array slot + UnsafeRow object header. */
-  val RowOverhead: Int = 32
+  /** Per stored row: its slot in the build side's address array. */
+  val AddressBytes: Int = 8
 }

@@ -1,5 +1,8 @@
 package graft.plans
 
+import graft.rangejoin.IntervalOrder
+
+import org.apache.spark.GraftCoreShim
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -137,11 +140,10 @@ private[graft] class IntervalCountRunner(
       math.max(16, groups.size() * 2))
     groups.forEach { (k, acc) =>
       // sort (start, end) pairs by start, keep ends co-permuted
-      val n = acc.starts.length
       val st0 = acc.starts.toArray; val en0 = acc.ends.toArray
-      val idx = Array.tabulate(n)(identity).sortBy(st0)
-      val st = Array.tabulate(n)(i => st0(idx(i)))
-      val enByStart = Array.tabulate(n)(i => en0(idx(i)))
+      val idx = IntervalOrder.byStart(st0)
+      val st = IntervalOrder.permute(st0, idx)
+      val enByStart = IntervalOrder.permute(en0, idx)
       val en = en0.clone(); java.util.Arrays.sort(en)
       keyed.put(k, new CountBuildEntry(st, enByStart, en,
         acc.invStarts.toArray, acc.invEnds.toArray))
@@ -290,7 +292,7 @@ case class IntervalCountExec(
 
   /** Build once, shared by the interpreted and codegen broadcast paths. */
   @transient private lazy val broadcastBuild: Broadcast[CountBuildSide] = {
-    val built = runner.buildSide(left.executeCollect().iterator)
+    val built = runner.buildSide(GraftCoreShim.collectIterator(left))
     longMetric("buildKeys") += built.keyed.size()
     sparkContext.broadcast(built)
   }

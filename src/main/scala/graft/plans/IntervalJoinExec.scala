@@ -1,8 +1,8 @@
 package graft.plans
 
-import graft.rangejoin.{AnyIntervalIndex, IntervalIndex, LongIntervalIndex, LongSuperIntervalsIndex, SuperIntervalsIndex}
+import graft.rangejoin.{AnyIntervalIndex, IntervalIndex, IntervalOrder, LongIntervalIndex, LongSuperIntervalsIndex, SuperIntervalsIndex}
 
-import org.apache.spark.TaskContext
+import org.apache.spark.{GraftCoreShim, TaskContext}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
@@ -12,6 +12,7 @@ import org.apache.spark.sql.catalyst.plans.physical._
 import org.apache.spark.sql.execution.{BinaryExecNode, CodegenSupport, SparkPlan}
 import org.apache.spark.sql.execution.metric.{SQLMetric, SQLMetrics}
 import org.apache.spark.sql.types.LongType
+import org.apache.spark.unsafe.Platform
 
 import scala.collection.mutable
 
@@ -69,9 +70,6 @@ case object NearestJoin extends IntervalJoinType
 case class AsofJoin(forward: Boolean, strict: Boolean)
   extends IntervalJoinType
 
-/** Per-key interval indexes + the build rows they point into. The index
-  * width (Int32 vs Int64 coordinates) is uniform across keys — decided
-  * once per join from `coordWidth` + the bound types. */
 /** Primitive growable long/int vectors for the build accumulators:
   * `ArrayBuffer[Long]` boxes every element (~64 B of transient
   * java.lang.Long + ref slot per appended bound), so a large build's
@@ -97,17 +95,6 @@ private[plans] final class LongVec(initial: Int = 16) {
   }
 }
 
-private[plans] final class IntVec(initial: Int = 16) {
-  private var arr = new Array[Int](initial)
-  private var n = 0
-  def +=(v: Int): Unit = {
-    if (n == arr.length) arr = java.util.Arrays.copyOf(arr, n * 2)
-    arr(n) = v; n += 1
-  }
-  def length: Int = n
-  def toArray: Array[Int] = java.util.Arrays.copyOf(arr, n)
-}
-
 /** Compiled (start, end) extractor: one generated projection per side,
   * no interpreted Expression.eval and no boxing in the per-row loops.
   * Shared by the join and count runners — one place for the NULL-bound
@@ -126,9 +113,96 @@ private[plans] final class BoundsEval(start: Expression, end: Expression,
   }
 }
 
-private[graft] class IntervalBuildSide(
+/** Append-only store of UnsafeRow bytes in byte pages of at most
+  * [[RowPageWriter.PageBytes]] (a larger row gets a page of its own), so no
+  * single array nears the 2 GiB limit. A record is an 8-byte header (the
+  * row's size, then 4 spare bytes that keep the row 8-byte aligned)
+  * followed by the row's bytes; its address is `page << 32 | offset`.
+  * `expectedBytes` (0 = unknown) sizes the pages exactly when the total is
+  * known; otherwise pages double from 64 KiB, so a small build never
+  * allocates a full page. */
+private[plans] final class RowPageWriter(expectedBytes: Long) {
+  import RowPageWriter._
+  private val pages = new mutable.ArrayBuffer[Array[Byte]]
+  private var page: Array[Byte] = Array.emptyByteArray
+  private var used = 0
+  private var written = 0L
+
+  /** Record bytes appended so far (headers included). */
+  def bytes: Long = written
+
+  def append(row: UnsafeRow): Long =
+    append(row.getBaseObject, row.getBaseOffset, row.getSizeInBytes)
+
+  /** Copy the record at `addr` of `from` to the end of this store. */
+  def appendFrom(from: RowPageWriter, addr: Long): Long = {
+    val p = from.pages((addr >>> 32).toInt)
+    val off = Platform.BYTE_ARRAY_OFFSET + addr.toInt
+    append(p, off + Header, Platform.getInt(p, off))
+  }
+
+  private def append(base: AnyRef, offset: Long, size: Int): Long = {
+    val rec = Header + size
+    if (used.toLong + rec > page.length) {
+      val want =
+        if (expectedBytes > 0) expectedBytes - written
+        else math.max(64L << 10, page.length * 2L)
+      page = new Array[Byte](math.max(rec.toLong, math.min(PageBytes, want)).toInt)
+      pages += page
+      used = 0
+    }
+    val addr = ((pages.length - 1).toLong << 32) | used
+    Platform.putInt(page, Platform.BYTE_ARRAY_OFFSET + used, size)
+    Platform.copyMemory(base, offset, page,
+      Platform.BYTE_ARRAY_OFFSET + used + Header, size)
+    used += rec
+    written += rec
+    addr
+  }
+
+  /** The pages, the last one trimmed to its records. */
+  def result(): Array[Array[Byte]] = {
+    if (pages.nonEmpty && used < page.length)
+      pages(pages.length - 1) = java.util.Arrays.copyOf(page, used)
+    pages.toArray
+  }
+}
+
+private[plans] object RowPageWriter {
+  val PageBytes: Long = 1L << 20
+  val Header: Int = 8
+}
+
+/** A join's build side, flat. Every build row's bytes sit in byte pages in
+  * index order — per equi-key, the order its index walks (start asc, end
+  * desc, then input order) — so position `i` of a key's index is that
+  * key's `i`-th row in memory, and emitting the pairs of one probe reads
+  * the rows nearly sequentially. `addrs(pos)` locates row `pos` (see
+  * [[RowPageWriter]]); `keyed` maps each equi-key to the index over its
+  * rows' positions. The index width (Int32 vs Int64 coordinates) is
+  * uniform across keys — decided once per join from `coordWidth` + the
+  * bound types. These three are all a broadcast ships.
+  *
+  * Read-only: a probe reads row `pos` by re-pointing an UnsafeRow of its
+  * own ([[pointTo]]). That row belongs to the task and is never a field
+  * here — one broadcast value is shared by every task thread of an
+  * executor. */
+private[graft] final class IntervalBuildSide(
     val keyed: java.util.HashMap[UnsafeRow, AnyIntervalIndex],
-    val rows: Array[InternalRow]) extends Serializable
+    pages: Array[Array[Byte]],
+    addrs: Array[Long]) extends Serializable {
+
+  def numRows: Int = addrs.length
+
+  /** Point `row` at build row `pos`; returns `row`. */
+  def pointTo(row: UnsafeRow, pos: Int): UnsafeRow = {
+    val a = addrs(pos)
+    val page = pages((a >>> 32).toInt)
+    val off = Platform.BYTE_ARRAY_OFFSET + a.toInt
+    row.pointTo(page, off + RowPageWriter.Header, Platform.getInt(page, off))
+    row
+  }
+}
 
 /**
  * Serializable build/probe kernel shared by both distribution modes; holds
@@ -176,10 +250,12 @@ private[graft] class IntervalJoinRunner(
     final class Acc {
       val starts = new LongVec
       val ends = new LongVec
-      val positions = new IntVec
+      val addrs = new LongVec // in `arrived`
     }
     val groups = new java.util.HashMap[UnsafeRow, Acc]
-    val stored = new mutable.ArrayBuffer[InternalRow]
+    // rows in arrival order; re-laid in index order below, then dropped
+    val arrived = new RowPageWriter(0L)
+    val unindexed = new LongVec
     val hasKeys = leftKeys.nonEmpty
     // FULL OUTER must emit every build row, even ones that can never match
     // (NULL bound / NULL equi-key): store them un-indexed so the unmatched
@@ -191,13 +267,18 @@ private[graft] class IntervalJoinRunner(
       // must not match anything (SQL `NULL = NULL` is not true — the
       // reference constructs the join with null_equals_null=false,
       // interval_join.rs ctor). Skip both at build time.
-      val indexable =
-        bounds.eval(row) && !(hasKeys && keyProj(row).anyNull)
+      val key = if (bounds.eval(row)) keyProj(row) else null
+      val indexable = key != null && !(hasKeys && key.anyNull)
       if (indexable || keepAll) {
-        val pos = stored.length
-        val copied = rowProj(row).copy()
-        stored += copied
-        mem.add(copied.getSizeInBytes + BuildMemoryAccountant.RowOverhead)
+        // collected and shuffled rows are already UnsafeRows of this
+        // schema; only other row classes need the projection
+        val r = row match {
+          case u: UnsafeRow if u.numFields == leftOutput.size => u
+          case _ => rowProj(row)
+        }
+        val addr = arrived.append(r)
+        mem.add(RowPageWriter.Header + r.getSizeInBytes +
+          BuildMemoryAccountant.AddressBytes)
         if (indexable) {
           mem.add(if (wide) BuildMemoryAccountant.LongIntervalOverhead
                   else BuildMemoryAccountant.IntervalOverhead)
@@ -205,33 +286,62 @@ private[graft] class IntervalJoinRunner(
           // reference's CastExpr (interval_join.rs:1661-1672); Int64 mode
           // stores the Long verbatim.
           if (!wide) { toIntChecked(bounds.s); toIntChecked(bounds.e) }
-          val key = keyProj(row)
           var acc = groups.get(key)
           if (acc == null) { acc = new Acc; groups.put(key.copy(), acc) }
           acc.starts += bounds.s
           acc.ends += bounds.e
-          acc.positions += pos
-        }
+          acc.addrs += addr
+        } else unindexed += addr
       }
     }
     val alg = joinType match {
       case NearestJoin | _: AsofJoin => "superintervals"
       case _ => algorithm
     }
+    // Lay the rows out again, key by key in index order: position `pos`
+    // is the pos-th row of `laid`. This sort owns the (start asc, end
+    // desc) order; `buildOrdered` indexes the sorted entries as they are.
+    var total = unindexed.length
+    groups.forEach((_, acc) => total += acc.starts.length)
+    // both copies exist until `arrived` is dropped: charge the second now
+    mem.add(arrived.bytes)
+    val laid = new RowPageWriter(arrived.bytes)
+    val addrs = new Array[Long](total)
+    var pos = 0
+    def layOut(from: LongVec, order: Array[Int]): Array[Int] = {
+      val base = pos
+      var j = 0
+      while (j < order.length) {
+        addrs(pos) = laid.appendFrom(arrived, from(order(j)))
+        pos += 1; j += 1
+      }
+      Array.range(base, pos)
+    }
     val keyed = new java.util.HashMap[UnsafeRow, AnyIntervalIndex](
       math.max(16, groups.size() * 2))
     groups.forEach { (k, acc) =>
       val idx: AnyIntervalIndex =
-        if (wide)
-          LongIntervalIndex.build(alg, acc.starts.toArray, acc.ends.toArray,
-            acc.positions.toArray)
-        else
-          IntervalIndex.build(alg, acc.starts.toIntArrayChecked(_.toInt),
-            acc.ends.toIntArrayChecked(_.toInt), acc.positions.toArray)
+        if (wide) {
+          val s = acc.starts.toArray
+          val e = acc.ends.toArray
+          val order = IntervalOrder.byStartEnd(s, e, endDescending = true)
+          val positions = layOut(acc.addrs, order)
+          LongIntervalIndex.buildOrdered(alg, IntervalOrder.permute(s, order),
+            IntervalOrder.permute(e, order), positions)
+        } else {
+          val s = acc.starts.toIntArrayChecked(_.toInt)
+          val e = acc.ends.toIntArrayChecked(_.toInt)
+          val order = IntervalOrder.byStartEnd(s, e, endDescending = true)
+          val positions = layOut(acc.addrs, order)
+          IntervalIndex.buildOrdered(alg, IntervalOrder.permute(s, order),
+            IntervalOrder.permute(e, order), positions)
+        }
       keyed.put(k, idx)
     }
+    layOut(unindexed, Array.range(0, unindexed.length))
+    mem.release(arrived.bytes)
     buildMemUsed += mem.used
-    new IntervalBuildSide(keyed, stored.toArray)
+    new IntervalBuildSide(keyed, laid.result(), addrs)
   }
 
   def probe(build: IntervalBuildSide, iter: Iterator[InternalRow],
@@ -282,6 +392,9 @@ private[graft] class IntervalJoinRunner(
       p
     }
     val nullLeft = new GenericInternalRow(leftOutput.size)
+    // this task's pointer into the (possibly shared) build side
+    val buildRow = new UnsafeRow(leftOutput.size)
+    def leftRow(pos: Int): UnsafeRow = build.pointTo(buildRow, pos)
     val rows = numOutputRows
 
     val hasKeys = rightKeys.nonEmpty
@@ -317,7 +430,7 @@ private[graft] class IntervalJoinRunner(
           var kept = 0
           var i = 0
           while (i < n) {
-            if (p.eval(joined(build.rows(sharedBuf(i)), rrow))) {
+            if (p.eval(joined(leftRow(sharedBuf(i)), rrow))) {
               sharedBuf(kept) = sharedBuf(i); kept += 1
             }
             i += 1
@@ -355,7 +468,7 @@ private[graft] class IntervalJoinRunner(
                 private var i = 0
                 def hasNext: Boolean = i < n
                 def next(): InternalRow = {
-                  val j = joined(build.rows(matchBuf(i)), rrow)
+                  val j = joined(leftRow(matchBuf(i)), rrow)
                   i += 1
                   j
                 }
@@ -378,7 +491,7 @@ private[graft] class IntervalJoinRunner(
             def hasNext: Boolean = i < n
             def next(): InternalRow = {
               rows += 1
-              val j = joined(build.rows(sharedBuf(i)), rrow)
+              val j = joined(leftRow(sharedBuf(i)), rrow)
               i += 1
               resultProj(j)
             }
@@ -390,7 +503,7 @@ private[graft] class IntervalJoinRunner(
         // guarantees this task is the only one probing this build
         // partition, so the post-drain sweep emits each unmatched build
         // row exactly once.
-        val matched = new java.util.BitSet(build.rows.length)
+        val matched = new java.util.BitSet(build.numRows)
         val nullRight = new GenericInternalRow(rightOutput.size)
         val pairs = iter.flatMap { rrow =>
           probeRows += 1
@@ -405,7 +518,7 @@ private[graft] class IntervalJoinRunner(
               rows += 1
               val pos = sharedBuf(i)
               matched.set(pos)
-              val j = joined(build.rows(pos), rrow)
+              val j = joined(leftRow(pos), rrow)
               i += 1
               resultProj(j)
             }
@@ -415,11 +528,11 @@ private[graft] class IntervalJoinRunner(
         val unmatchedSweep = new Iterator[InternalRow] {
           private var pos = 0
           private def advance(): Unit =
-            while (pos < build.rows.length && matched.get(pos)) pos += 1
-          def hasNext: Boolean = { advance(); pos < build.rows.length }
+            while (pos < build.numRows && matched.get(pos)) pos += 1
+          def hasNext: Boolean = { advance(); pos < build.numRows }
           def next(): InternalRow = {
             advance()
-            val j = joined(build.rows(pos), nullRight)
+            val j = joined(leftRow(pos), nullRight)
             pos += 1
             rows += 1
             resultProj(j)
@@ -473,7 +586,7 @@ private[graft] class IntervalJoinRunner(
           }
           rows += 1
           if (pos < 0) resultProj(joined(nullLeft, rrow))
-          else resultProj(joined(build.rows(pos), rrow))
+          else resultProj(joined(leftRow(pos), rrow))
         }
 
       case AsofJoin(forward, strict) =>
@@ -514,11 +627,11 @@ private[graft] class IntervalJoinRunner(
           // are farther)
           val accepted = pos >= 0 && (residualPred match {
             case None => true
-            case Some(p) => p.eval(joined(build.rows(pos), rrow))
+            case Some(p) => p.eval(joined(leftRow(pos), rrow))
           })
           rows += 1
           if (!accepted) resultProj(joined(nullLeft, rrow))
-          else resultProj(joined(build.rows(pos), rrow))
+          else resultProj(joined(leftRow(pos), rrow))
         }
     }
   }
@@ -660,9 +773,9 @@ case class IntervalJoinExec(
     * broadcast paths. */
   @transient private lazy val broadcastBuild: Broadcast[IntervalBuildSide] = {
     val t0 = System.nanoTime()
-    val built = runner.buildSide(left.executeCollect().iterator)
+    val built = runner.buildSide(GraftCoreShim.collectIterator(left))
     longMetric("buildTime") += (System.nanoTime() - t0) / 1000000
-    longMetric("buildRows") += built.rows.length
+    longMetric("buildRows") += built.numRows
     longMetric("buildKeys") += built.keyed.size()
     sparkContext.broadcast(built)
   }
@@ -683,7 +796,7 @@ case class IntervalJoinExec(
           val t0 = System.nanoTime()
           val built = run.buildSide(liter)
           buildTime += (System.nanoTime() - t0) / 1000000
-          buildRows += built.rows.length
+          buildRows += built.numRows
           buildKeys += built.keyed.size()
           run.probe(built, riter, TaskContext.getPartitionId())
         }
@@ -759,10 +872,15 @@ case class IntervalJoinExec(
     * same loop fusion the reference gets from its monomorphized Rust probe
     * (interval_join.rs probe loop). Other algorithms keep the generic
     * buffer path. The cast is safe: the runner builds every per-key index
-    * with this exec's `algorithm`. */
+    * with this exec's `algorithm`. Each match re-points the task's own
+    * `ptrTerm` row at the build row's bytes; the walk visits positions
+    * in descending order, so successive matches read adjacent memory. */
   private def genMatchLoop(ctx: CodegenContext, idxTerm: String,
-      rowsTerm: String, bufTerm: String, sL: String, eL: String,
-      leftRowTerm: String, matchTail: String): String = {
+      buildTerm: String, ptrTerm: String, bufTerm: String, sL: String,
+      eL: String, leftRowTerm: String, matchTail: String): String = {
+    val rowCls = classOf[UnsafeRow].getName
+    def leftRowAt(pos: String) =
+      s"$rowCls $leftRowTerm = $buildTerm.pointTo($ptrTerm, $pos);"
     val a = algorithm.toLowerCase
     val superFamily = a == "superintervals" || a == "coitrees" || a == "default"
     if (wide && superFamily) {
@@ -793,7 +911,7 @@ case class IntervalJoinExec(
          |int $ii = $lo - 1;
          |while ($ii >= 0) {
          |  if ($eArr[$ii] >= $sL) {
-         |    InternalRow $leftRowTerm = $rowsTerm[$pArr[$ii]];
+         |    ${leftRowAt(s"$pArr[$ii]")}
          |    $ii--; // decrement BEFORE the fused tail: a parent-emitted
          |           // continue must not be able to skip the loop update
          |    $matchTail
@@ -828,7 +946,7 @@ case class IntervalJoinExec(
          |int $ii = $lo - 1;
          |while ($ii >= 0) {
          |  if ($eArr[$ii] >= (int) $sL) {
-         |    InternalRow $leftRowTerm = $rowsTerm[$pArr[$ii]];
+         |    ${leftRowAt(s"$pArr[$ii]")}
          |    $ii--; // decrement BEFORE the fused tail: a parent-emitted
          |           // continue must not be able to skip the loop update
          |    $matchTail
@@ -848,7 +966,7 @@ case class IntervalJoinExec(
       s"""
          |int $nTerm = $call;
          |for (int $iTerm = 0; $iTerm < $nTerm; $iTerm++) {
-         |  InternalRow $leftRowTerm = $rowsTerm[$bufTerm.get($iTerm)];
+         |  ${leftRowAt(s"$bufTerm.get($iTerm)")}
          |  $matchTail
          |}
        """.stripMargin
@@ -866,8 +984,7 @@ case class IntervalJoinExec(
     val buildCls = classOf[IntervalBuildSide].getName
     val buildTerm = ctx.addMutableState(buildCls, "intervalBuild",
       forceInline = true)
-    val rowsTerm = ctx.addMutableState("InternalRow[]", "intervalBuildRows",
-      forceInline = true)
+    val ptrTerm = buildRowState(ctx)
     val bufTerm = ctx.addMutableState(
       classOf[graft.rangejoin.IntMatchBuffer].getName, "intervalMatchBuf",
       v => s"$v = new ${classOf[graft.rangejoin.IntMatchBuffer].getName}();",
@@ -909,8 +1026,8 @@ case class IntervalJoinExec(
     val keyNullCheck =
       if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
     val matchTail = consumeMatch(ctx, leftVars, rightVars, numOutput)
-    val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
-      leftRowTerm, matchTail)
+    val matchLoop = genMatchLoop(ctx, idxTerm, buildTerm, ptrTerm, bufTerm,
+      sL, eL, leftRowTerm, matchTail)
     val guard = if (wide) "" else intRangeGuard(sL, eL)
 
     s"""
@@ -918,8 +1035,7 @@ case class IntervalJoinExec(
        |  long $t0 = System.nanoTime();
        |  $buildTerm = ($buildCls) $runnerRef.buildSide($leftInput);
        |  $buildTime.add((System.nanoTime() - $t0) / 1000000L);
-       |  $rowsTerm = $buildTerm.rows();
-       |  $buildRows.add($rowsTerm.length);
+       |  $buildRows.add($buildTerm.numRows());
        |  $buildKeys.add($buildTerm.keyed().size());
        |}
        |while ($rightInput.hasNext()) {
@@ -940,6 +1056,15 @@ case class IntervalJoinExec(
        |  if (shouldStop()) return;
        |}
      """.stripMargin
+  }
+
+  /** This task's pointer row into the build side: a field of the
+    * generated class, which every task instantiates for itself — never
+    * of the broadcast value its task threads share. */
+  private def buildRowState(ctx: CodegenContext): String = {
+    val rowCls = classOf[UnsafeRow].getName
+    ctx.addMutableState(rowCls, "intervalBuildRow",
+      v => s"$v = new $rowCls(${left.output.size});", forceInline = true)
   }
 
   /** Int32 mode's checked narrowing of the probe bounds (reference
@@ -967,8 +1092,7 @@ case class IntervalJoinExec(
       classOf[IntervalBuildSide].getName, "intervalBuild",
       v => s"$v = (${classOf[IntervalBuildSide].getName}) $buildRef.value();",
       forceInline = true)
-    val rowsTerm = ctx.addMutableState("InternalRow[]", "intervalBuildRows",
-      v => s"$v = $buildTerm.rows();", forceInline = true)
+    val ptrTerm = buildRowState(ctx)
     val bufTerm = ctx.addMutableState(
       classOf[graft.rangejoin.IntMatchBuffer].getName, "intervalMatchBuf",
       v => s"$v = new ${classOf[graft.rangejoin.IntMatchBuffer].getName}();",
@@ -1003,8 +1127,8 @@ case class IntervalJoinExec(
     val keyNullCheck =
       if (rightKeys.nonEmpty) s"&& !${keyEv.value}.anyNull()" else ""
     val matchTail = consumeMatch(ctx, leftVars, input, numOutput)
-    val matchLoop = genMatchLoop(ctx, idxTerm, rowsTerm, bufTerm, sL, eL,
-      leftRowTerm, matchTail)
+    val matchLoop = genMatchLoop(ctx, idxTerm, buildTerm, ptrTerm, bufTerm,
+      sL, eL, leftRowTerm, matchTail)
     val guard = if (wide) "" else intRangeGuard(sL, eL)
 
     s"""

@@ -83,15 +83,25 @@ object IntervalIndex {
     * `spark.graft.intervalJoin.algorithm`). Mirrors `Algorithm::from_str`
     * (reference: sequila/sequila-core/src/session_context.rs:85-104). */
   def build(algorithm: String, starts: Array[Int], ends: Array[Int],
+            positions: Array[Int]): IntervalIndex = {
+    val order = IntervalOrder.byStartEnd(starts, ends, endDescending = true)
+    buildOrdered(algorithm, IntervalOrder.permute(starts, order),
+      IntervalOrder.permute(ends, order), IntervalOrder.permute(positions, order))
+  }
+
+  /** [[build]] for input already in [[IntervalOrder]]'s (start asc, end
+    * desc) order — the interval join's row layout order: superintervals
+    * and AIList take it as is; Lapper and the tree re-sort (end asc). */
+  def buildOrdered(algorithm: String, starts: Array[Int], ends: Array[Int],
             positions: Array[Int]): IntervalIndex =
     algorithm.toLowerCase match {
       // the superintervals design serves the Coitrees (default) slot — a
       // sorted array with branch skips has the same cache-linear profile
       // the vEB-layout COITree targets (SURVEY §2 #6 allows this)
       case "superintervals" | "coitrees" | "default" =>
-        SuperIntervalsIndex.build(starts, ends, positions)
+        SuperIntervalsIndex.fromOrdered(starts, ends, positions)
       case "ailist" =>
-        AIListIndex.build(starts, ends, positions)
+        AIListIndex.fromOrdered(starts, ends, positions)
       // real augmented interval tree (reference's IntervalTree /
       // ArrayIntervalTree slots, rust-bio style — interval_join.rs:816-841)
       case "intervaltree" | "arrayintervaltree" =>
@@ -263,26 +273,14 @@ final class SuperIntervalsIndex private (
 }
 
 object SuperIntervalsIndex {
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): SuperIntervalsIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    val starts = new Array[Int](n)
-    val ends = new Array[Int](n)
-    val positions = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      i += 1
-    }
+  /** Index over intervals already in (start asc, end desc) order. */
+  def fromOrdered(starts: Array[Int], ends: Array[Int],
+            positions: Array[Int]): SuperIntervalsIndex = {
+    val n = starts.length
     // branch(i) = nearest j < i with ends(j) >= ends(i), else -1
     val branch = new Array[Int](n)
     val stack = new ArrayBuffer[Int](16)
-    i = 0
+    var i = 0
     while (i < n) {
       while (stack.nonEmpty && ends(stack(stack.length - 1)) < ends(i))
         stack.remove(stack.length - 1)
@@ -368,10 +366,8 @@ object LapperIndex {
   def build(starts0: Array[Int], ends0: Array[Int],
             positions0: Array[Int]): LapperIndex = {
     val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
+    val order = IntervalOrder.byStartEnd(starts0, ends0,
+      endDescending = false)
     val starts = new Array[Int](n)
     val ends = new Array[Int](n)
     val positions = new Array[Int](n)
@@ -426,19 +422,11 @@ object AugmentedTreeIndex {
   def build(starts0: Array[Int], ends0: Array[Int],
             positions0: Array[Int]): AugmentedTreeIndex = {
     val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
-    val starts = new Array[Int](n)
-    val ends = new Array[Int](n)
-    val positions = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      i += 1
-    }
+    val order = IntervalOrder.byStartEnd(starts0, ends0,
+      endDescending = false)
+    val starts = IntervalOrder.permute(starts0, order)
+    val ends = IntervalOrder.permute(ends0, order)
+    val positions = IntervalOrder.permute(positions0, order)
     val subtreeMax = new Array[Int](math.max(n, 1))
     def fill(lo: Int, hi: Int): Int = {
       if (lo >= hi) return Int.MinValue
@@ -681,10 +669,18 @@ object LongIntervalIndex {
   /** Long-width algorithm dispatch — same names as
     * [[IntervalIndex.build]]. */
   def build(algorithm: String, starts: Array[Long], ends: Array[Long],
+            positions: Array[Int]): LongIntervalIndex = {
+    val order = IntervalOrder.byStartEnd(starts, ends, endDescending = true)
+    buildOrdered(algorithm, IntervalOrder.permute(starts, order),
+      IntervalOrder.permute(ends, order), IntervalOrder.permute(positions, order))
+  }
+
+  /** Long-width [[IntervalIndex.buildOrdered]]. */
+  def buildOrdered(algorithm: String, starts: Array[Long], ends: Array[Long],
             positions: Array[Int]): LongIntervalIndex =
     algorithm.toLowerCase match {
       case "superintervals" | "coitrees" | "default" =>
-        LongSuperIntervalsIndex.build(starts, ends, positions)
+        LongSuperIntervalsIndex.fromOrdered(starts, ends, positions)
       case "ailist" =>
         buildAIList(starts, ends, positions)
       case "intervaltree" | "arrayintervaltree" =>
@@ -702,10 +698,8 @@ object LongIntervalIndex {
   private def buildLapper(starts0: Array[Long], ends0: Array[Long],
       positions0: Array[Int]): LongLapperIndex = {
     val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
+    val order = IntervalOrder.byStartEnd(starts0, ends0,
+      endDescending = false)
     val starts = new Array[Long](n)
     val ends = new Array[Long](n)
     val positions = new Array[Int](n)
@@ -730,19 +724,11 @@ object LongIntervalIndex {
   private def buildTree(starts0: Array[Long], ends0: Array[Long],
       positions0: Array[Int]): LongAugmentedTreeIndex = {
     val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) < ends0(b)
-    }
-    val starts = new Array[Long](n)
-    val ends = new Array[Long](n)
-    val positions = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      i += 1
-    }
+    val order = IntervalOrder.byStartEnd(starts0, ends0,
+      endDescending = false)
+    val starts = IntervalOrder.permute(starts0, order)
+    val ends = IntervalOrder.permute(ends0, order)
+    val positions = IntervalOrder.permute(positions0, order)
     val subtreeMax = new Array[Long](math.max(n, 1))
     def fill(lo: Int, hi: Int): Long = {
       if (lo >= hi) return Long.MinValue
@@ -755,19 +741,15 @@ object LongIntervalIndex {
     new LongAugmentedTreeIndex(starts, ends, positions, subtreeMax)
   }
 
-  private def buildAIList(starts0: Array[Long], ends0: Array[Long],
-      positions0: Array[Int]): LongAIListIndex = {
+  /** AIList over intervals already in (start asc, end desc) order. */
+  private def buildAIList(starts: Array[Long], ends: Array[Long],
+      positions: Array[Int]): LongAIListIndex = {
     val MaxComps = 8
     val MinCompLen = 64
     val CovCutoff = 10
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    var curS = order.map(starts0)
-    var curE = order.map(ends0)
-    var curP = order.map(positions0)
+    var curS = starts
+    var curE = ends
+    var curP = positions
 
     val compS = ArrayBuffer[Array[Long]]()
     val compE = ArrayBuffer[Array[Long]]()
@@ -817,26 +799,14 @@ object LongIntervalIndex {
 }
 
 object LongSuperIntervalsIndex {
-  def build(starts0: Array[Long], ends0: Array[Long],
-            positions0: Array[Int]): LongSuperIntervalsIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    val starts = new Array[Long](n)
-    val ends = new Array[Long](n)
-    val positions = new Array[Int](n)
-    var i = 0
-    while (i < n) {
-      val o = order(i)
-      starts(i) = starts0(o); ends(i) = ends0(o); positions(i) = positions0(o)
-      i += 1
-    }
+  /** Index over intervals already in (start asc, end desc) order. */
+  def fromOrdered(starts: Array[Long], ends: Array[Long],
+            positions: Array[Int]): LongSuperIntervalsIndex = {
+    val n = starts.length
     // branch(i) = nearest j < i with ends(j) >= ends(i), else -1
     val branch = new Array[Int](n)
     val stack = new ArrayBuffer[Int](16)
-    i = 0
+    var i = 0
     while (i < n) {
       while (stack.nonEmpty && ends(stack(stack.length - 1)) < ends(i))
         stack.remove(stack.length - 1)
@@ -853,16 +823,12 @@ object AIListIndex {
   private val MinCompLen = 64
   private val CovCutoff = 10
 
-  def build(starts0: Array[Int], ends0: Array[Int],
-            positions0: Array[Int]): AIListIndex = {
-    val n = starts0.length
-    val order = Array.range(0, n).sortWith { (a, b) =>
-      if (starts0(a) != starts0(b)) starts0(a) < starts0(b)
-      else ends0(a) > ends0(b)
-    }
-    var curS = order.map(starts0)
-    var curE = order.map(ends0)
-    var curP = order.map(positions0)
+  /** Index over intervals already in (start asc, end desc) order. */
+  def fromOrdered(starts: Array[Int], ends: Array[Int],
+            positions: Array[Int]): AIListIndex = {
+    var curS = starts
+    var curE = ends
+    var curP = positions
 
     val compS = ArrayBuffer[Array[Int]]()
     val compE = ArrayBuffer[Array[Int]]()

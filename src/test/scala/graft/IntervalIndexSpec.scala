@@ -1,6 +1,6 @@
 package graft
 
-import graft.rangejoin.{IntervalIndex, SuperIntervalsIndex}
+import graft.rangejoin.{IntervalIndex, IntervalOrder, SuperIntervalsIndex}
 
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -37,13 +37,58 @@ class IntervalIndexSpec extends AnyFunSuite {
         val iv = randomIntervals(rnd, rnd.nextInt(200))
         val naive = build("naive", iv)
         val real = build(alg, iv)
+        // the join's path: entries pre-sorted, positions carried along
+        val order = IntervalOrder.byStartEnd(iv.map(_._1), iv.map(_._2),
+          endDescending = true)
+        val ordered = IntervalIndex.buildOrdered(alg, order.map(iv(_)._1),
+          order.map(iv(_)._2), order)
         for (_ <- 0 until 20) {
           val s = rnd.nextInt(1300) - 100
           val e = s + rnd.nextInt(151)
           assert(results(real, s, e) == results(naive, s, e),
             s"trial=$trial probe=[$s,$e]")
+          assert(results(ordered, s, e) == results(naive, s, e),
+            s"ordered trial=$trial probe=[$s,$e]")
         }
       }
+    }
+  }
+
+  test("IntervalOrder ≡ the boxed stable comparator sort, equal starts " +
+      "and exact duplicates included") {
+    val rnd = new Random(11)
+    for (trial <- 0 until 300) {
+      val n = rnd.nextInt(400)
+      // few distinct coordinates: long runs of equal starts and exact
+      // duplicates; extremes exercise the Int32 key packing
+      val coords = Array(Int.MinValue, -7, 0, 3, 9, Int.MaxValue)
+      def pick() =
+        if (rnd.nextInt(4) == 0) coords(rnd.nextInt(coords.length))
+        else rnd.nextInt(12)
+      val starts = Array.fill(n)(pick())
+      val ends = Array.fill(n)(pick())
+      for (endDesc <- Seq(true, false)) {
+        // the comparator every index builder used before: stable TimSort
+        val old = Array.range(0, n).sortWith { (a, b) =>
+          if (starts(a) != starts(b)) starts(a) < starts(b)
+          else if (endDesc) ends(a) > ends(b) else ends(a) < ends(b)
+        }.toSeq
+        assert(IntervalOrder.byStartEnd(starts, ends, endDesc).toSeq == old,
+          s"trial=$trial int32 endDesc=$endDesc")
+        val ls = starts.map(_.toLong * 3L)
+        val le = ends.map(e => if (e == Int.MinValue) Long.MinValue
+                               else if (e == Int.MaxValue) Long.MaxValue
+                               else e.toLong * 3L)
+        val oldL = Array.range(0, n).sortWith { (a, b) =>
+          if (ls(a) != ls(b)) ls(a) < ls(b)
+          else if (endDesc) le(a) > le(b) else le(a) < le(b)
+        }.toSeq
+        assert(IntervalOrder.byStartEnd(ls, le, endDesc).toSeq == oldL,
+          s"trial=$trial int64 endDesc=$endDesc")
+      }
+      val ls = starts.map(_.toLong)
+      assert(IntervalOrder.byStart(ls).toSeq ==
+        Array.range(0, n).sortBy(ls(_)).toSeq, s"trial=$trial byStart")
     }
   }
 
@@ -73,13 +118,20 @@ class IntervalIndexSpec extends AnyFunSuite {
         }
         val idx = LongIntervalIndex.build(alg, starts, ends,
           Array.range(0, n))
+        val order = IntervalOrder.byStartEnd(starts, ends,
+          endDescending = true)
+        val ordered = LongIntervalIndex.buildOrdered(alg,
+          IntervalOrder.permute(starts, order),
+          IntervalOrder.permute(ends, order), order)
         for (_ <- 0 until 20) {
           val s = base + rnd.nextLong(86400000000L)
           val e = s + rnd.nextLong(120000000L)
-          val got = { val b = ArrayBuffer[Int](); idx.query(s, e)(b += _); b.sorted.toSeq }
           val exp = (0 until n).filter(i => starts(i) <= e && ends(i) >= s)
-          assert(got == exp, s"trial=$trial probe=[$s,$e]")
-          assert(idx.count(s, e) == exp.size)
+          for ((ix, what) <- Seq(idx -> "build", ordered -> "buildOrdered")) {
+            val got = { val b = ArrayBuffer[Int](); ix.query(s, e)(b += _); b.sorted.toSeq }
+            assert(got == exp, s"$what trial=$trial probe=[$s,$e]")
+            assert(ix.count(s, e) == exp.size)
+          }
         }
       }
     }
@@ -96,12 +148,13 @@ class IntervalIndexSpec extends AnyFunSuite {
   }
 
   test("Long nearest with operands in opposite halves (no gap wrap)") {
-    import graft.rangejoin.LongSuperIntervalsIndex
+    import graft.rangejoin.{LongIntervalIndex, LongSuperIntervalsIndex}
     val s = 3L * (1L << 61) // 1.5 * 2^62
     val farNeg = -(1L << 62)
     val starts = Array(farNeg, s + 5)
     val ends = Array(farNeg, s + 6)
-    val idx = LongSuperIntervalsIndex.build(starts, ends, Array(0, 1))
+    val idx = LongIntervalIndex.build("superintervals", starts, ends,
+      Array(0, 1)).asInstanceOf[LongSuperIntervalsIndex]
     // true gaps: to far-left interval ≈ 5*2^61 (overflows raw Long math),
     // to the right interval = 5 — the right one must win
     assert(idx.nearest(s, s) == 1)
@@ -109,18 +162,19 @@ class IntervalIndexSpec extends AnyFunSuite {
 
   test("Long nearest: saturated gap at the domain edge still returns " +
       "the only candidate") {
-    import graft.rangejoin.LongSuperIntervalsIndex
+    import graft.rangejoin.{LongIntervalIndex, LongSuperIntervalsIndex}
     // single build interval at Long.MaxValue, probe at Long.MinValue:
     // there is NO left candidate and the right candidate's saturated gap
     // equals the Long.MaxValue sentinel bestDist starts at — it must
     // still win (a key WITH build rows must never NULL-pad)
-    val idx = LongSuperIntervalsIndex.build(
+    val idx = LongIntervalIndex.build("superintervals",
       Array(Long.MaxValue), Array(Long.MaxValue), Array(7))
+      .asInstanceOf[LongSuperIntervalsIndex]
     assert(idx.nearest(Long.MinValue, Long.MinValue) == 7)
   }
 
   test("Long index nearest ≡ linear argmin at epoch-micro magnitudes") {
-    import graft.rangejoin.LongSuperIntervalsIndex
+    import graft.rangejoin.{LongIntervalIndex, LongSuperIntervalsIndex}
     val rnd = new Random(9)
     val base = 1704067200000000L
     for (trial <- 0 until 100) {
@@ -131,7 +185,8 @@ class IntervalIndexSpec extends AnyFunSuite {
         starts(i) = base + rnd.nextLong(10000000L)
         ends(i) = starts(i) + rnd.nextLong(300000L)
       }
-      val idx = LongSuperIntervalsIndex.build(starts, ends, Array.range(0, n))
+      val idx = LongIntervalIndex.build("superintervals", starts, ends,
+        Array.range(0, n)).asInstanceOf[LongSuperIntervalsIndex]
       for (_ <- 0 until 20) {
         val s = base + rnd.nextLong(12000000L) - 1000000L
         val e = s + rnd.nextLong(400000L)

@@ -454,6 +454,27 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     }
   }
 
+  test("the re-layout's second copy of the build rows counts against the cap") {
+    // kept: 12 * (8 + 40 + 8 + 32) bytes; peak: that + a second 12 * (8 + 40)
+    // bytes of records while both layouts exist
+    val peak = 12L * (8 + 40 + 8 + 32) + 12L * (8 + 40)
+    spark.conf.set(GraftSession.IntervalJoinForceMode, "broadcast")
+    try {
+      spark.conf.set(GraftSession.MaxBuildBytes, (peak - 1).toString)
+      val ex = intercept[Exception] { overlapJoin(reads, targets).collect() }
+      def messages(t: Throwable): Seq[String] =
+        if (t == null) Nil
+        else Option(t.getMessage).toSeq ++ messages(t.getCause)
+      assert(messages(ex).exists(_.contains("[GRAFT_INTERVAL_JOIN]")),
+        messages(ex).mkString(" | "))
+      spark.conf.set(GraftSession.MaxBuildBytes, peak.toString)
+      assert(overlapJoin(reads, targets).collect().length == 16)
+    } finally {
+      spark.conf.set(GraftSession.MaxBuildBytes, "0")
+      spark.conf.set(GraftSession.IntervalJoinForceMode, "")
+    }
+  }
+
   test("join metrics report build rows/keys/memory and probe rows") {
     val df = overlapJoin(reads, targets)
     assertUsesIntervalJoin(df)
@@ -463,7 +484,11 @@ class IntervalJoinSpec extends SparkTestBase with BeforeAndAfterEach {
     }.get
     assert(node.metrics("buildRows").value == 12)
     assert(node.metrics("buildKeys").value == 2)
-    assert(node.metrics("buildMemUsed").value > 0)
+    // per build row: its page record (8-byte header + a 40-byte UnsafeRow:
+    // null bits, three 8-byte slots, "chrN" padded to 8), its 8-byte
+    // address, and the 32-byte Int32 interval estimate; the arrival-order
+    // copy of the records, charged during the re-layout, is released
+    assert(node.metrics("buildMemUsed").value == 12 * (8 + 40 + 8 + 32))
     assert(node.metrics("probeRows").value == 10)
     assert(node.metrics("numOutputRows").value == 16)
     assert(node.metrics("probeTime").value >= 0)
